@@ -74,7 +74,7 @@ Design rules
 from __future__ import annotations
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -86,6 +86,8 @@ from scripts_toolkit_spark.ext.similarity import (
     attach_pq_lut,
     auto_n_cells,
     corpus_stats,
+    corpus_stats_aggs,
+    corpus_stats_from_row,
     exact_pick_rows,
     ivf_assign,
     ivf_assign_two_level,
@@ -114,6 +116,50 @@ def _local_fs_path(path: str) -> str | None:
     if "://" in path:
         return None
     return path
+
+
+_CENTROIDS_DDL = "cell_id int, centroid array<double>"
+_CODEBOOK_DDL = "s int, code int, csub array<double>"
+# Spark keeps the frame's schema as JSON under this footer key, and its
+# schema inference reads it back from one file's footer. The model files
+# the driver writes with pyarrow carry no such key; their schemas are fixed.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+_PA_WRITTEN_SCHEMAS = {"/centroids": _CENTROIDS_DDL, "/codebook": _CODEBOOK_DDL}
+
+
+def _footer_schema(fs_path: str, sub: str):
+    """The schema Spark would infer for the local parquet dir `fs_path`,
+    read from the first data file's footer on the driver; None when the
+    dir holds no data file or a footer of unknown origin. Partition
+    columns are not in the footer: Spark still infers them from the
+    directory names."""
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    for root, dirs, files in os.walk(fs_path):
+        # Spark skips names starting with "_" or "." (_SUCCESS, .crc)
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                kv = pq.read_metadata(os.path.join(root, f)).metadata or {}
+                if _SPARK_SCHEMA_KEY in kv:
+                    return StructType.fromJson(json.loads(kv[_SPARK_SCHEMA_KEY]))
+                return _PA_WRITTEN_SCHEMAS.get(sub)
+    return None
+
+
+def _read_store(spark: SparkSession, path: str, sub: str) -> DataFrame:
+    """{path}{sub} as a lazy frame. On a local store the schema comes from
+    the parquet footer on the driver, so the read launches no job;
+    `spark.read.parquet` runs a footer-inference job per call. Non-local
+    stores, and dirs without a known footer, keep `spark.read.parquet`."""
+    lp = _local_fs_path(path + sub)
+    schema = _footer_schema(lp, sub) if lp is not None else None
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path + sub)
 
 
 def _pa_read_rows(fs_path: str) -> list[dict]:
@@ -247,21 +293,22 @@ def _next_batch_id(spark: SparkSession, path: str) -> int:
                     pass
         if ids:
             return max(ids) + 1
-    prev_max = spark.read.parquet(path + "/vectors").agg(F.max("batch_id")).first()[0]
+    prev_max = _read_store(spark, path, "/vectors").agg(F.max("batch_id")).first()[0]
     return int(prev_max) + 1 if prev_max is not None else 0
 
 
 def _codebook_frame(spark: SparkSession, path: str) -> DataFrame | None:
     """{path}/codebook as a lazy frame, None for an IVF-only store. On a
-    local store the existence probe is an os.path check (r15); the read
-    itself is lazy either way (schema comes from the footer driver-side)."""
+    local store the existence probe is an os.path check and the read
+    launches no job (`_read_store`); elsewhere Spark infers the schema
+    with a job."""
     import os
 
     lp = _local_fs_path(path + "/codebook")
     if lp is not None:
-        return spark.read.parquet(path + "/codebook") if os.path.isdir(lp) else None
+        return _read_store(spark, path, "/codebook") if os.path.isdir(lp) else None
     try:
-        return spark.read.parquet(path + "/codebook")
+        return _read_store(spark, path, "/codebook")
     except AnalysisException:  # IVF-only index: no PQ model to keep in sync
         return None
 
@@ -431,16 +478,12 @@ def _seeded_residual_model(
         normed, max(n_cells, n_codes), id_col, vec_col, n_rows=n_rows
     )
     cent_rows = [(c, v) for c, v in big_rows if c < n_cells]
-    centroids = local_rows_df(
-        spark, cent_rows, "cell_id int, centroid array<double>"
-    )
+    centroids = local_rows_df(spark, cent_rows, _CENTROIDS_DDL)
     cent_np = np.asarray([v for _c, v in cent_rows], dtype=np.float64)
     cb_rows = seeded_residual_codebook_rows(
         [(c, v) for c, v in big_rows if c < n_codes], cent_np, m, sub_dim
     )
-    codebook = local_rows_df(
-        spark, cb_rows, "s int, code int, csub array<double>"
-    )
+    codebook = local_rows_df(spark, cb_rows, _CODEBOOK_DDL)
     return centroids, codebook, cent_rows, cb_rows
 
 
@@ -491,7 +534,7 @@ def _collect_codebook_store(spark: SparkSession, path: str):
     rows = _codebook_rows_from_store(path)
     if rows is not None:
         return _codebook_from_rows(rows)
-    return _collect_codebook(spark.read.parquet(path + "/codebook"))
+    return _collect_codebook(_read_store(spark, path, "/codebook"))
 
 
 def _centroid_rows_from_store(spark: SparkSession, path: str, meta: dict):
@@ -714,11 +757,17 @@ def build_ann_index(
     over `residual_vectors` for the full trained configuration."""
     spark = vectors.sparkSession
     par = spark.sparkContext.defaultParallelism
-    normed = normalize_vectors(vectors.repartition(par), id_col, vec_col).transform(_materialize)
-    # one stats job serves both auto_n_cells' count AND ivf_assign's
-    # collect-before-guard (net-zero jobs vs the former bare .count());
-    # skipped entirely when the caller passed the shape in
-    n_rows, dim = corpus_stats(normed, vec_col, n_rows=n_rows, dim=dim)
+    normed = normalize_vectors(vectors.repartition(par), id_col, vec_col)
+    # the corpus shape (auto_n_cells' count, ivf_assign's cap guard) is
+    # observed on the checkpoint job that materializes `normed` anyway,
+    # so it costs no job of its own; not observed when the caller passed it
+    stats = None
+    if n_rows is None or dim is None:
+        stats = Observation()
+        normed = normed.observe(stats, *corpus_stats_aggs(vec_col))
+    normed = normed.transform(_materialize)
+    if stats is not None:
+        n_rows, dim = corpus_stats_from_row(stats.get, n_rows, dim)
     if n_cells is None and centroids is None:
         n_cells = auto_n_cells(normed, n_rows=n_rows)
     if n_home < 1:
@@ -780,9 +829,7 @@ def build_ann_index(
             cb_rows = seeded_residual_codebook_rows(
                 [(c, v) for c, v in big_rows if c < n_codes], cent_np, m, sub_dim
             )
-            sub_codebook = local_rows_df(
-                spark, cb_rows, "s int, code int, csub array<double>"
-            )
+            sub_codebook = local_rows_df(spark, cb_rows, _CODEBOOK_DDL)
     elif centroids is None:
         if two_level:
             # fully-distributed pick: no survivor collect; the /centroids
@@ -798,9 +845,7 @@ def build_ann_index(
             cent_rows = exact_pick_rows(
                 normed, n_cells, id_col, vec_col, n_rows=n_rows
             )
-            centroids = local_rows_df(
-                spark, cent_rows, "cell_id int, centroid array<double>"
-            )
+            centroids = local_rows_df(spark, cent_rows, _CENTROIDS_DDL)
     else:
         # caller-provided model (e.g. Lloyd-refined): cut its corpus lineage
         centroids = centroids.transform(_materialize)
@@ -820,11 +865,11 @@ def build_ann_index(
         _pa_write_rows(cent_lp, cent_rows, _centroids_pa_schema())
         # rebind to the written file: identical rows, and keeps the
         # downstream schema anchor a real parquet relation either way
-        centroids = spark.read.parquet(path + "/centroids")
+        centroids = _read_store(spark, path, "/centroids")
     else:
         centroids.write.mode("overwrite").parquet(path + "/centroids")
         if two_level:
-            centroids = spark.read.parquet(path + "/centroids")
+            centroids = _read_store(spark, path, "/centroids")
     # the stored model's REALIZED shape (r14): known free when the exact
     # pick's rows are driver-held; from the written files' parquet
     # footers on a local store (r15 — row counts live in the metadata,
@@ -913,7 +958,7 @@ def build_ann_index(
         # extra localCheckpoint job (and its block I/O) disappears;
         # parquet round-trips doubles exactly → bit-identical codes
         stored_rb = (
-            spark.read.parquet(path + "/vectors")
+            _read_store(spark, path, "/vectors")
             .where(F.col("batch_id") == -1)
             .select(id_col, vec_col, "cell_id", "probe_rank")
         )
@@ -938,7 +983,7 @@ def build_ann_index(
             .partitionBy("batch_id")
             .parquet(path + "/codes")
         )
-    return spark.read.parquet(path + "/vectors")
+    return _read_store(spark, path, "/vectors")
 
 
 def append_to_index(
@@ -959,7 +1004,7 @@ def append_to_index(
     index (meta n_home > 1) spills the late batch the same way — the
     appended copies are row-identical to a one-shot spilled build.
     Returns the updated corpus frame."""
-    cents = spark.read.parquet(path + "/centroids")
+    cents = _read_store(spark, path, "/centroids")
     meta = _meta_dict(spark, path)  # ONE meta read per verb (r14, driver-side r15)
     n_home, residual = _meta_n_home_residual(meta)
     two_level, super_probe = _meta_two_level(meta)
@@ -1004,7 +1049,7 @@ def append_to_index(
         # job before the two consumers disappears, and partition pruning
         # reads back exactly this batch's rows (bit-identical doubles)
         batch_rb = (
-            spark.read.parquet(path + "/vectors")
+            _read_store(spark, path, "/vectors")
             .where(F.col("batch_id") == next_batch)
             .select(id_col, vec_col, "cell_id", "probe_rank")
         )
@@ -1024,7 +1069,7 @@ def append_to_index(
                 batch_rb, codebook, id_col, vec_col, m=cb_m, sub_dim=cb_sd
             )
         )
-        if "batch_id" in spark.read.parquet(path + "/codes").columns:
+        if "batch_id" in _read_store(spark, path, "/codes").columns:
             (
                 codes.withColumn("batch_id", F.lit(next_batch).cast("bigint"))
                 .write.mode("append")
@@ -1035,7 +1080,7 @@ def append_to_index(
             # pre-r11 store: keep its unpartitioned /codes layout (mixing
             # partitioned subdirs into a flat dir corrupts the read)
             codes.write.mode("append").parquet(path + "/codes")
-    return spark.read.parquet(path + "/vectors")
+    return _read_store(spark, path, "/vectors")
 
 
 def search_index(
@@ -1078,8 +1123,8 @@ def search_index(
     The probe assignment is the literal-codebook kernel (no shuffle); the
     only shuffles are the cell_id equi-join, the gather, and the
     per-query top-k."""
-    cents = spark.read.parquet(path + "/centroids")
-    store = spark.read.parquet(path + "/vectors")
+    cents = _read_store(spark, path, "/centroids")
+    store = _read_store(spark, path, "/vectors")
     meta = _meta_dict(spark, path)  # ONE meta read per verb (r14, driver-side r15)
     n_home, residual = _meta_n_home_residual(meta)
     two_level, super_probe = _meta_two_level(meta)
@@ -1184,7 +1229,7 @@ def search_index(
         )
         qlut_keys = ["query_id"]
     queries_f = assigned.select(F.col(id_col).alias("query_id"), "cell_id")
-    corpus_codes = spark.read.parquet(path + "/codes").select(
+    corpus_codes = _read_store(spark, path, "/codes").select(
         F.col(id_col).alias("neighbor_id"), "cell_id", "ncodes"
     )
     # rerank legs read HOME rows only — one raw vector per id
@@ -1239,12 +1284,12 @@ def index_health(
     n_trained = (
         spark.range(1).select(F.lit(int(nc_meta)).alias("n_cells_trained"))
         if nc_meta is not None
-        else spark.read.parquet(path + "/centroids").agg(
+        else _read_store(spark, path, "/centroids").agg(
             F.count(F.lit(1)).alias("n_cells_trained")
         )
     )
     occ = (
-        _with_probe_rank(spark.read.parquet(path + "/vectors"))
+        _with_probe_rank(_read_store(spark, path, "/vectors"))
         .groupBy("cell_id")
         .agg(
             F.count(F.lit(1)).alias("cnt"),
@@ -1288,7 +1333,7 @@ def compact_index(spark: SparkSession, path: str) -> DataFrame:
     batch_id-partitioned /codes store (r11 layout) merges the same way —
     codes content unchanged, only the layout folds into batch_id = -1."""
     snap = (
-        _with_probe_rank(spark.read.parquet(path + "/vectors"))
+        _with_probe_rank(_read_store(spark, path, "/vectors"))
         .select("vec_id", "embedding", "cell_id", "probe_rank")
         .transform(_materialize)
     )
@@ -1299,7 +1344,7 @@ def compact_index(spark: SparkSession, path: str) -> DataFrame:
         .parquet(path + "/vectors")
     )
     try:
-        codes = spark.read.parquet(path + "/codes")
+        codes = _read_store(spark, path, "/codes")
     except AnalysisException:
         codes = None
     if codes is not None and "batch_id" in codes.columns:
@@ -1310,7 +1355,7 @@ def compact_index(spark: SparkSession, path: str) -> DataFrame:
             .partitionBy("batch_id")
             .parquet(path + "/codes")
         )
-    return spark.read.parquet(path + "/vectors")
+    return _read_store(spark, path, "/vectors")
 
 
 def delete_from_index(
@@ -1328,14 +1373,14 @@ def delete_from_index(
     before their in-place overwrites."""
     key = ids.select(F.col(id_col)).distinct().transform(_materialize)
     kept = (
-        _with_probe_rank(spark.read.parquet(path + "/vectors"))
+        _with_probe_rank(_read_store(spark, path, "/vectors"))
         .join(key, id_col, "left_anti")
         .select(id_col, "embedding", "cell_id", "probe_rank", "batch_id")
         .transform(_materialize)
     )
     kept.write.mode("overwrite").partitionBy("batch_id").parquet(path + "/vectors")
     try:
-        codes = spark.read.parquet(path + "/codes")
+        codes = _read_store(spark, path, "/codes")
     except AnalysisException:
         codes = None
     if codes is not None:
@@ -1344,7 +1389,7 @@ def delete_from_index(
         if "batch_id" in kept_codes.columns:  # r11 layout mirrors /vectors
             writer = writer.partitionBy("batch_id")
         writer.parquet(path + "/codes")
-    return spark.read.parquet(path + "/vectors")
+    return _read_store(spark, path, "/vectors")
 
 
 def retrain_index(
@@ -1384,7 +1429,7 @@ def retrain_index(
     # re-pick/re-assign over one row per VECTOR (home rows) — the spilled
     # copies are derived storage, recomputed below from the new model
     snap = (
-        _with_probe_rank(spark.read.parquet(path + "/vectors"))
+        _with_probe_rank(_read_store(spark, path, "/vectors"))
         .where(F.col("probe_rank") == 1)
         .select(id_col, vec_col)
         .transform(_materialize)
@@ -1417,25 +1462,23 @@ def retrain_index(
         # re-encoded against it below
         cents = threshold_centroids(snap, n_cells, id_col, vec_col, n_rows=n_rows)
         try:
-            codebook = spark.read.parquet(path + "/codebook").transform(_materialize)
+            codebook = _read_store(spark, path, "/codebook").transform(_materialize)
         except AnalysisException:
             codebook = None
     else:
         cent_rows_new = exact_pick_rows(snap, n_cells, id_col, vec_col, n_rows=n_rows)
-        cents = local_rows_df(
-            spark, cent_rows_new, "cell_id int, centroid array<double>"
-        )
+        cents = local_rows_df(spark, cent_rows_new, _CENTROIDS_DDL)
         codebook = _codebook_frame(spark, path)
         if codebook is not None:
             codebook = codebook.transform(_materialize)
     cent_lp = _local_fs_path(path + "/centroids")
     if cent_rows_new is not None and cent_lp is not None:
         _pa_write_rows(cent_lp, cent_rows_new, _centroids_pa_schema())
-        cents = spark.read.parquet(path + "/centroids")
+        cents = _read_store(spark, path, "/centroids")
     else:
         cents.write.mode("overwrite").parquet(path + "/centroids")
         if two_level:
-            cents = spark.read.parquet(path + "/centroids")
+            cents = _read_store(spark, path, "/centroids")
     # the model SHAPE changed with the re-pick: refresh meta's realized
     # (n_cells, dim) so later verbs keep skipping the stats job against
     # the CURRENT model (r14 — a stale count would change a two-level
@@ -1483,7 +1526,7 @@ def retrain_index(
         # encode the just-rewritten corpus (r15): the overwrite IS the
         # materialization boundary — no extra localCheckpoint job
         stored_rb = (
-            spark.read.parquet(path + "/vectors")
+            _read_store(spark, path, "/vectors")
             .where(F.col("batch_id") == -1)
             .select(id_col, vec_col, "cell_id", "probe_rank")
         )
@@ -1510,4 +1553,4 @@ def retrain_index(
             .partitionBy("batch_id")
             .parquet(path + "/codes")
         )
-    return spark.read.parquet(path + "/vectors")
+    return _read_store(spark, path, "/vectors")

@@ -128,12 +128,26 @@ def corpus_stats(
     already known to skip the job entirely."""
     if n_rows is not None and dim is not None:
         return n_rows, dim
+    row = vectors.agg(*corpus_stats_aggs(vec_col)).first()
+    return corpus_stats_from_row(row, n_rows, dim)
+
+
+def corpus_stats_aggs(vec_col: str = "embedding") -> list[Column]:
+    """The aggregates behind `corpus_stats`, for callers that compute them
+    with `observe()` on a job they run anyway."""
     # ignorenulls: a NULL first-seen vector would report dim=0 and
     # silently disable every 8·n_cells·dim cap check downstream
-    row = vectors.agg(
+    return [
         F.count(F.lit(1)).alias("__n"),
         F.first(vec_col, ignorenulls=True).alias("__v"),
-    ).first()
+    ]
+
+
+def corpus_stats_from_row(
+    row, n_rows: int | None = None, dim: int | None = None
+) -> tuple[int, int]:
+    """(row count, vector dim) from a row of `corpus_stats_aggs`; a value
+    the caller already knows wins over the computed one."""
     if n_rows is None:
         n_rows = int(row["__n"])
     if dim is None:
@@ -896,11 +910,17 @@ def normalize_vectors(
     PQ: on unit vectors, L2² = 2 − 2·cos, so L2 ranking is monotone in
     cosine and the quantizer optimizes the metric the search uses.
     Deterministic: sequential-fold norm + per-element IEEE double divide
-    (replayed in DuckDB by the same list_transform / list_reduce)."""
-    n = F.sqrt(_dot(F.col(vec_col), F.col(vec_col)))
+    (replayed in DuckDB by the same list_transform / list_reduce).
+    The norm is repeated into an array beside the vector, so it is
+    folded once per row; inside the lambda it would be re-folded per
+    element (dim² multiplies per vector)."""
+    v = F.col(vec_col)
+    n = F.sqrt(_dot(v, v))
     return vectors.select(
         F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double") / n).alias(vec_col),
+        F.zip_with(
+            v, F.array_repeat(n, F.size(v)), lambda x, nx: x.cast("double") / nx
+        ).alias(vec_col),
     )
 
 
@@ -1841,7 +1861,8 @@ def quantize_embeddings(
     q[i] = round(v[i]/scale) ∈ [-127, 127]. Deterministic (double divide +
     round-half-away-from-zero, identical in Spark and DuckDB), so
     quantization is oracle-replayable; search re-ranks on the dequantized
-    image q[i]·scale."""
+    image q[i]·scale. The scale is repeated into an array beside the
+    vector, so its max runs once per row, not once per element."""
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     scale = F.array_max(F.transform(v, lambda x: F.abs(x))) / F.lit(127.0)
     cols = [c for c in vectors.columns if c != id_col] if keep_vec else []
@@ -1849,7 +1870,11 @@ def quantize_embeddings(
         F.col(id_col),
         *cols,
         scale.alias("q_scale"),
-        F.transform(v, lambda x: F.round(x / scale).cast("int")).alias("q"),
+        F.zip_with(
+            v,
+            F.array_repeat(scale, F.size(vec_col)),
+            lambda x, s: F.round(x / s).cast("int"),
+        ).alias("q"),
     )
 
 

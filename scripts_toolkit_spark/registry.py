@@ -78,6 +78,44 @@ from scripts_toolkit_spark.plans import ext_demos2 as _x2img
 from scripts_toolkit_spark.plans import scale_demos as sd
 from scripts_toolkit_spark.plans import taxonomy as _tax15
 
+# Helper-change rotation: `normalize_vectors` now folds each vector's norm
+# once per row and `quantize_embeddings` takes each row's int8 scale once
+# (ext/similarity.py; bit-identical outputs, pinned by
+# tests/test_vector_row_constants.py) — a helper change the fn-source hash
+# cannot see, so every registered caller sits in the window per the
+# CLAUDE.md rule. The other callers (the ANN store rows, whose verbs also
+# read store files with footer schemas, and image_dhash_near_dups) were
+# already in-window. Thirteen unchanged rows that reach neither helper
+# ceded their seats and register just past the window.
+from scripts_toolkit_spark.plans import ext_demos2 as x2
+from scripts_toolkit_spark.plans import media_demos as md
+
+register("ann_two_level_assign", xd.ann_two_level_assign, xd.ANN_TWO_LEVEL_ASSIGN_SQL)
+register("ann_threshold_cells", xd.ann_threshold_cells, xd.ANN_THRESHOLD_CELLS_SQL)
+register("ann_topk_int8", xd.ann_topk_int8, xd.ANN_TOPK_INT8_SQL)
+register(
+    "embedding_quantization_stats",
+    x2.embedding_quantization_stats,
+    x2.EMBEDDING_QUANTIZATION_STATS_SQL,
+)
+register(
+    "audio_fingerprint_near_dups",
+    x2.audio_fingerprint_near_dups,
+    x2.AUDIO_FINGERPRINT_NEAR_DUPS_SQL,
+)
+register("video_decode_stats", md.video_decode_stats, md.VIDEO_DECODE_STATS_SQL)
+register("adpcm_roundtrip_stats", md.adpcm_roundtrip_stats, md.ADPCM_ROUNDTRIP_STATS_SQL)
+register(
+    "video_frame_sample_stats",
+    md.video_frame_sample_stats,
+    md.VIDEO_FRAME_SAMPLE_STATS_SQL,
+)
+register("video_scene_cuts", md.video_scene_cuts, md.VIDEO_SCENE_CUTS_SQL)
+register("image_decode_stats", xd.image_decode_stats, xd.IMAGE_DECODE_STATS_SQL)
+register("audio_decode_stats", xd.audio_decode_stats, xd.AUDIO_DECODE_STATS_SQL)
+register("image_resize_stats", xd.image_resize_stats, xd.IMAGE_RESIZE_STATS_SQL)
+register("audio_resample_stats", xd.audio_resample_stats, xd.AUDIO_RESAMPLE_STATS_SQL)
+
 # r15 rotation: the hierarchy trio returns to the window — their fn
 # bodies CHANGED this round (edge-frame materialization cut the 4x-
 # inlined union subtree / ~2 s plan compile; results identical, tri-SF
@@ -102,20 +140,17 @@ register("bloom_semijoin_prune", sd.bloom_semijoin_prune, sd.BLOOM_SEMIJOIN_PRUN
 # long-green, unchanged; parked in TIER 2.
 from scripts_toolkit_spark.plans import spatial_demos as spd
 
-register("spatial_radius_pairs", spd.spatial_radius_pairs, spd.SPATIAL_RADIUS_PAIRS_SQL)
 # NEW (r11 wave 2): bounded kNN for a 64-query md5 cap — ST_DWithin +
 # rank semantics, two-stage global_topk query pick, 9-cell candidate
 # equi-join, per-query rank over the density-bounded candidate set
 # (semantic_dedup_drops ceded its seat — r5-green, unchanged; its r8
 # threshold twin keeps a seat; parked in TIER 2).
-register("spatial_knn", spd.spatial_knn, spd.SPATIAL_KNN_SQL)
 # NEW (r12): unbounded-in-practice kNN — the fixed-ring multi-resolution
 # grid (round-11 verdict "What's missing" #3: grid_knn's radius bound was
 # the documented gap; the 4-level doubling pyramid stops each query at
 # the first level whose 3×3 block provably holds its true top-k)
 # (minhash_near_dups ceded its seat — r11-changed but r11-green and
 # ext/dedup.py unchanged this round; parked just past the window).
-register("spatial_knn_multires", spd.spatial_knn_multires, spd.SPATIAL_KNN_MULTIRES_SQL)
 # NEW (r11 wave 2): batch twin of the 10th streaming store
 # (streaming/bloom_stream.py) — incremental Bloom membership: per-batch
 # word partials merge by bit_or (associative + commutative + IDEMPOTENT,
@@ -227,15 +262,12 @@ register("ann_topk_same_lang", xd.ann_topk_same_lang, xd.ANN_TOPK_SAME_LANG_SQL)
 # round; parked in TIER 2).
 from scripts_toolkit_spark.plans import ext_demos2 as _x2cc
 
-register("near_dup_clusters", xd.near_dup_clusters, xd.NEAR_DUP_CLUSTERS_SQL)
-register("embedding_dup_clusters", _x2cc.embedding_dup_clusters, _x2cc.EMBEDDING_DUP_CLUSTERS_SQL)
 # r14 rotation: chisq_event_type_bucket + ab_test_ks_stat ceded their
 # seats (r5..r13-green, analytics6.py untouched this round; parked in
 # TIER 2) for the two near-dup rows whose bodies changed in the r14
 # optimization pass: winnow_overlap_pairs (materialization boundary
 # moved to the exploded fingerprints) and image_dhash_near_dups (corpus
 # repartition hoisted above the quantize projection).
-register("winnow_overlap_pairs", xd.winnow_overlap_pairs, xd.WINNOW_OVERLAP_PAIRS_SQL)
 register(
     "image_dhash_near_dups", _x2img.image_dhash_near_dups, _x2img.IMAGE_DHASH_NEAR_DUPS_SQL
 )
@@ -255,17 +287,11 @@ register(
 # union + re-prune; merged state == one-shot sketch, so the oracle is
 # the one-shot replay (packing_efficiency_report ceded its seat —
 # r5..r9-green, unchanged; parked in TIER 2).
-register(
-    "incremental_quantile_sketch",
-    a6.incremental_quantile_sketch,
-    a6.INCREMENTAL_QUANTILE_SKETCH_SQL,
-)
 # NEW (r5 wave 2): sparse retrieval (ext/retrieval.py) — BM25 ranking +
 # inverted-index posting lists; blocked edit-distance record linkage
 # (operators/linkage.py); A-ES weighted sampling without replacement
 from scripts_toolkit_spark.plans import retrieval_demos as rv
 
-register("bm25_top_docs", rv.bm25_top_docs, rv.BM25_TOP_DOCS_SQL)
 # r13 rotation: the five other bare-global-window queries migrated to
 # operators/topk.global_topk this round (round-12 verdict Next #2 /
 # "What's wrong" #2) hold in-window seats with bm25_top_docs; five
@@ -274,13 +300,6 @@ register("bm25_top_docs", rv.bm25_top_docs, rv.BM25_TOP_DOCS_SQL)
 # unigram_nll_scores — all parked in TIER 2).
 from scripts_toolkit_spark.plans import ext_demos2 as _x2pr
 
-register("weighted_sample_docs", rv.weighted_sample_docs, rv.WEIGHTED_SAMPLE_DOCS_SQL)
-register("pagerank_top_parties", _x2pr.pagerank_top_parties, _x2pr.PAGERANK_TOP_PARTIES_SQL)
-register("zipf_fit_tokens", a6.zipf_fit_tokens, a6.ZIPF_FIT_TOKENS_SQL)
-register(
-    "bigram_pmi_collocations", cd.bigram_pmi_collocations, cd.BIGRAM_PMI_COLLOCATIONS_SQL
-)
-register("trending_tokens", cd.trending_tokens, cd.TRENDING_TOKENS_SQL)
 # NEW (r5 wave 2): temporal/CDC shapes (operators/spans.py) — SCD2 interval
 # build + changelog latest-wins apply (the MERGE INTO plan)
 from scripts_toolkit_spark.plans import events_demos as ed
@@ -410,6 +429,29 @@ register(
     srcd.url_manifest_fetch_melt,
     srcd.URL_MANIFEST_FETCH_MELT_SQL,
 )
+# Ceded to the helper-change rotation above (all unchanged, reaching
+# neither normalize_vectors nor quantize_embeddings): the spatial trio,
+# the near-dup cluster/winnow rows, the incremental quantile sketch and
+# the r13 global_topk migrations.
+register("spatial_radius_pairs", spd.spatial_radius_pairs, spd.SPATIAL_RADIUS_PAIRS_SQL)
+register("spatial_knn", spd.spatial_knn, spd.SPATIAL_KNN_SQL)
+register("spatial_knn_multires", spd.spatial_knn_multires, spd.SPATIAL_KNN_MULTIRES_SQL)
+register("near_dup_clusters", xd.near_dup_clusters, xd.NEAR_DUP_CLUSTERS_SQL)
+register("embedding_dup_clusters", _x2cc.embedding_dup_clusters, _x2cc.EMBEDDING_DUP_CLUSTERS_SQL)
+register("winnow_overlap_pairs", xd.winnow_overlap_pairs, xd.WINNOW_OVERLAP_PAIRS_SQL)
+register(
+    "incremental_quantile_sketch",
+    a6.incremental_quantile_sketch,
+    a6.INCREMENTAL_QUANTILE_SKETCH_SQL,
+)
+register("bm25_top_docs", rv.bm25_top_docs, rv.BM25_TOP_DOCS_SQL)
+register("weighted_sample_docs", rv.weighted_sample_docs, rv.WEIGHTED_SAMPLE_DOCS_SQL)
+register("pagerank_top_parties", _x2pr.pagerank_top_parties, _x2pr.PAGERANK_TOP_PARTIES_SQL)
+register("zipf_fit_tokens", a6.zipf_fit_tokens, a6.ZIPF_FIT_TOKENS_SQL)
+register(
+    "bigram_pmi_collocations", cd.bigram_pmi_collocations, cd.BIGRAM_PMI_COLLOCATIONS_SQL
+)
+register("trending_tokens", cd.trending_tokens, cd.TRENDING_TOKENS_SQL)
 # NEW (r10): mergeable bottom-k quantile sketch (ext/quantiles.py) — the
 # third oracle-replayable sketch beside the md5 HLL and the CMS monitor:
 # k=256 md5-priority uniform sample per group through the two-stage
@@ -435,34 +477,9 @@ register(
 # ceded its window seat in r14 to ann_topk_same_lang (r12-green,
 # unchanged since).
 register("ewma_event_forecast", a6.ewma_event_forecast, a6.EWMA_EVENT_FORECAST_SQL)
-# NEW (r11 wave 2): REAL video + REAL compressed-audio decode under the
-# driver gate (the two §2.12 modalities that previously stopped at honest
-# stubs): pure-stdlib uncompressed-DIB AVI mux/demux with generic RIFF
-# chunk walking (ext/videocodec.py — container + pixel decode both real),
-# stride-2 frame sampling in the explode shape, and a real lossy IMA-ADPCM
-# codec (ext/audiocodec.py) whose integer encode→decode recurrence the
-# oracle replays in a recursive CTE. Three seats ceded (near_dup_clusters
-# — green since r3, judge re-verified r10; embedding_near_dup_pairs —
-# r6-green, unchanged; weighted_sample_docs — r5-green, unchanged; all
-# parked in TIER 2).
-from scripts_toolkit_spark.plans import media_demos as md
-
-register("video_decode_stats", md.video_decode_stats, md.VIDEO_DECODE_STATS_SQL)
-# r12: adpcm_roundtrip_stats is the round's #1 CHANGED row (oracle
-# rewritten from the recursive CTE to unrolled layers) and MUST hold an
-# in-window seat; video_frame_sample_stats (r11-green, unchanged) cedes
-# and registers right after it.
-register("adpcm_roundtrip_stats", md.adpcm_roundtrip_stats, md.ADPCM_ROUNDTRIP_STATS_SQL)
-register(
-    "video_frame_sample_stats",
-    md.video_frame_sample_stats,
-    md.VIDEO_FRAME_SAMPLE_STATS_SQL,
-)
-# NEW (r11 wave 2): temporal analysis on the decoded frames — classic
-# SAD shot-boundary detection with a hash-gated threshold flag
-# (inverted_index_postings ceded its seat — r5-green, unchanged;
-# parked in TIER 2).
-register("video_scene_cuts", md.video_scene_cuts, md.VIDEO_SCENE_CUTS_SQL)
+# (The media-decode rows — real AVI video and IMA-ADPCM audio decode,
+# frame sampling, scene cuts — register in the helper-change rotation
+# block at the top of TIER 1.)
 # CHANGED: empty-shingle-set exclusion before LSH banding (ext/dedup.py,
 # streaming/dedup_stream.py) — NULL-vs-NaN oracle divergence fix
 register("minhash_near_dups", xd.minhash_near_dups, xd.MINHASH_NEAR_DUPS_SQL)
@@ -546,14 +563,10 @@ register("incremental_cms_hitters", cd.incremental_cms_hitters, cd.INCREMENTAL_C
 # r10 rotation: parked from the window (green r7..r9, unchanged in r10 —
 # similarity.py untouched this round) to make room for ann_index_spilled
 # and quantile_sketch_values.
-# NEW (r7): coarse-to-fine two-level IVF assignment — the scale path for
-# constant-occupancy cell counts (n_cells ∝ N) where the flat literal
-# codebook outgrows the task closure.
-register("ann_two_level_assign", xd.ann_two_level_assign, xd.ANN_TWO_LEVEL_ASSIGN_SQL)
-# NEW (r7): extreme-N combination — fully-distributed md5-threshold
-# centroid pick (no driver collect, binomial sizing) feeding the
-# two-level assignment.
-register("ann_threshold_cells", xd.ann_threshold_cells, xd.ANN_THRESHOLD_CELLS_SQL)
+# (ann_two_level_assign — the coarse-to-fine two-level IVF assignment —
+# and ann_threshold_cells — the distributed md5-threshold centroid pick
+# feeding it — register in the helper-change rotation block at the top
+# of TIER 1.)
 
 # r7 rotation: parked from the window (r6-green in CORRECTNESS_r06,
 # unchanged in r7) to make room for the ANN index lifecycle rows.
@@ -609,17 +622,7 @@ register("markov_transitions", ed.markov_transitions, ed.MARKOV_TRANSITIONS_SQL)
 from scripts_toolkit_spark.plans import ext_demos2 as x2
 
 register("char_ngram_jaccard", x2.char_ngram_jaccard, x2.CHAR_NGRAM_JACCARD_SQL)
-register(
-    "audio_fingerprint_near_dups",
-    x2.audio_fingerprint_near_dups,
-    x2.AUDIO_FINGERPRINT_NEAR_DUPS_SQL,
-)
 register("value_percentiles", x2.value_percentiles, x2.VALUE_PERCENTILES_SQL)
-register(
-    "embedding_quantization_stats",
-    x2.embedding_quantization_stats,
-    x2.EMBEDDING_QUANTIZATION_STATS_SQL,
-)
 register("hll_distinct_users", x2.hll_distinct_users, x2.HLL_DISTINCT_USERS_SQL)
 register("grouping_sets_revenue", x2.grouping_sets_revenue, x2.GROUPING_SETS_REVENUE_SQL)
 
@@ -692,7 +695,6 @@ register(
 )
 register("tfidf_top_terms", cd.tfidf_top_terms, cd.TFIDF_TOP_TERMS_SQL)
 register("cms_heavy_hitters", cd.cms_heavy_hitters, cd.CMS_HEAVY_HITTERS_SQL)
-register("ann_topk_int8", xd.ann_topk_int8, xd.ANN_TOPK_INT8_SQL)
 # r15: embedding_dup_clusters moved INTO the window (connected_components
 # helper change); zorder_layout_stats parked here.
 register("zorder_layout_stats", sd.zorder_layout_stats, sd.ZORDER_LAYOUT_STATS_SQL)
@@ -766,10 +768,6 @@ register("ann_topk_cosine", xd.ann_topk_cosine, xd.ANN_TOPK_COSINE_SQL)
 register("ann_topk_lsh", xd.ann_topk_lsh, xd.ANN_TOPK_LSH_SQL)
 register("text_stats", xd.text_stats, xd.TEXT_STATS_SQL)
 register("media_features", xd.media_features, xd.MEDIA_FEATURES_SQL)
-register("image_decode_stats", xd.image_decode_stats, xd.IMAGE_DECODE_STATS_SQL)
-register("audio_decode_stats", xd.audio_decode_stats, xd.AUDIO_DECODE_STATS_SQL)
-register("image_resize_stats", xd.image_resize_stats, xd.IMAGE_RESIZE_STATS_SQL)
-register("audio_resample_stats", xd.audio_resample_stats, xd.AUDIO_RESAMPLE_STATS_SQL)
 
 # ---- rollup/cube, window functions, set ops, validity windows, SMJ
 # (§2.4 A7, §2.10, §2.6 D4-D5, §2.7 J7) --------------------------------------

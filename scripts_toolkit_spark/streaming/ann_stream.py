@@ -61,6 +61,7 @@ from scripts_toolkit_spark.ext.ann_index import (
     _meta_n_home_residual,
     _meta_shape,
     _meta_two_level,
+    _read_store,
 )
 from scripts_toolkit_spark.ext.similarity import (
     _dot,
@@ -135,7 +136,7 @@ def make_ann_ingest_processor(
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        cents = spark.read.parquet(index_path + "/centroids")
+        cents = _read_store(spark, index_path, "/centroids")  # no job on a local store
         meta = _meta_dict(spark, index_path)  # ONE meta read per batch (r14, driver-side r15)
         n_home, residual = _meta_n_home_residual(meta)
         two_level, super_probe = _meta_two_level(meta)
